@@ -39,14 +39,126 @@ object Aggs {
     df.orderBy(col(orderCol)).limit(n)
 
   /**
-   * Global rank/cumulative-count over the distinct (v, c) pairs WITHOUT a
-   * single-task sort: the distinct set is range-partitioned on the sort key,
-   * ranked within each partition, and the per-partition (distinct-count,
-   * row-count) totals — at most `numParts` tiny rows — are collected to the
-   * driver, turned into cumulative offsets and broadcast back. At 10M+
-   * distinct values the old `Window.orderBy` plan funneled every distinct
-   * value through ONE task; this plan's widest single task holds one range
-   * partition.
+   * The ordered scan: a per-group rank and weighted running sum under a total
+   * order, WITHOUT a single-task sort. Appends to every input row
+   *   rank         — 0-based position within its group under `order`;
+   *   cum_before   — sum of `weight` over strictly-earlier rows of the group;
+   *   group_rows   — the group's row count;
+   *   group_weight — the group's weight sum.
+   * With no `groups` the whole frame is one group (a global rank).
+   *
+   * Shape — one range Exchange, one collect, one final pass:
+   *   1. range-partition on (groups, order), so a hot group spans many
+   *      partitions and partition ids follow the order; persisted once
+   *      (PersistOnce) because both the collect and the final pass read it;
+   *   2. one small job collects per-(partition, group) row counts and weight
+   *      sums — O(partitions x groups) rows, by contract driver-small — which
+   *      become exclusive offsets (ascending partition id within each group)
+   *      and are broadcast;
+   *   3. sortWithinPartitions + ONE mapPartitions pass walks each partition
+   *      in order and looks the offsets up only when the group changes.
+   * Why not Window.partitionBy(__pid) for step 3: after repartitionByRange it
+   * re-Exchanges the whole table to hashpartitioning(__pid) (plan-probed) and
+   * the offsets would need one more broadcast join; sortWithinPartitions keeps
+   * the range partitioning and adds ZERO shuffle.
+   *
+   * Callers whose input is an expensive aggregate persist it BEFORE calling:
+   * repartitionByRange runs a hidden SAMPLING job over its input, which would
+   * otherwise re-execute that aggregate a second time (see [[rankedCounts]]).
+   *
+   * `order` must be total within each group for a deterministic rank; nulls
+   * sort as the columns say (ascending: nulls first). Group columns need value
+   * equality (no binary). `weight` is a long-valued Column over the input;
+   * null weighs 0.
+   */
+  private[graft] def orderedScan(df: DataFrame, groups: Seq[String], order: Seq[Column],
+                                 weight: Column): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val spark = df.sparkSession
+    val np = math.max(spark.sessionState.conf.numShufflePartitions, 1)
+    val sortKey = groups.map(col) ++ order
+    val parts = df.repartitionByRange(np, sortKey: _*)
+      .withColumn("__pid", spark_partition_id())
+      .transform(org.apache.spark.sql.graft.PersistOnce(_))
+    val ng = groups.size
+    val perPart = parts.groupBy(col("__pid") +: groups.map(col): _*)
+      .agg(count(lit(1)), coalesce(sum(weight.cast("long")), lit(0L)))
+      .collect().map(r => (r.getInt(0), r.toSeq.slice(1, 1 + ng).toList,
+        r.getLong(1 + ng), r.getLong(2 + ng)))
+    val offsets = Map.newBuilder[(Int, List[Any]), (Long, Long)]
+    val totals = perPart.groupBy(_._2).map { case (g, rows) =>
+      var n = 0L; var w = 0L
+      rows.sortBy(_._1).foreach { case (pid, _, pn, pw) =>
+        offsets += (pid, g) -> (n, w); n += pn; w += pw
+      }
+      g -> (n, w)
+    }
+    val offB = spark.sparkContext.broadcast(offsets.result())
+    val totB = spark.sparkContext.broadcast(totals)
+    val scan = parts.withColumn("__w", weight.cast("long"))
+    val pIdx = scan.schema.fieldIndex("__pid")
+    val wIdx = scan.schema.fieldIndex("__w")
+    val gIdx = groups.map(scan.schema.fieldIndex).toArray
+    val keep = df.schema.fieldNames.map(scan.schema.fieldIndex)
+    val outSchema = StructType(df.schema.fields ++
+      Seq("rank", "cum_before", "group_rows", "group_weight")
+        .map(StructField(_, LongType, nullable = false)))
+    scan.sortWithinPartitions(sortKey: _*)
+      .mapPartitions { it =>
+        var cur: Array[Any] = null
+        var rank = 0L; var cum = 0L; var gRows = 0L; var gWeight = 0L
+        it.map { row =>
+          if (cur == null || gIdx.indices.exists(i => row.get(gIdx(i)) != cur(i))) {
+            cur = gIdx.map(row.get)
+            val g = cur.toList
+            val (r0, c0) = offB.value.getOrElse((row.getInt(pIdx), g), (0L, 0L))
+            val (tn, tw) = totB.value.getOrElse(g, (0L, 0L))
+            rank = r0; cum = c0; gRows = tn; gWeight = tw
+          }
+          val vals = new Array[Any](keep.length + 4)
+          var i = 0
+          while (i < keep.length) { vals(i) = row.get(keep(i)); i += 1 }
+          vals(i) = rank; vals(i + 1) = cum; vals(i + 2) = gRows; vals(i + 3) = gWeight
+          rank += 1; cum += (if (row.isNullAt(wIdx)) 0L else row.getLong(wIdx))
+          Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
+        }
+      }(org.apache.spark.sql.Encoders.row(outSchema))
+  }
+
+  /**
+   * The salted two-stage rank: per group, the rows ranked 1.. under `order`,
+   * keeping those with rank <= `k` (a per-row Column, so per-group quotas can
+   * be joined on); appends a long `rank` column.
+   *
+   * A plain per-group Window funnels a dominant group — a whole world's
+   * features in one low-zoom tile, half a corpus in one language — through
+   * ONE task. So stage 1 ranks (groups, __salt) sub-groups and keeps each
+   * one's first k rows, a provable superset of the group's top k; stage 2
+   * ranks the <= k x salts survivors per group exactly. The salt is a
+   * deterministic hash of `saltBy`, not spark_partition_id: it is stable
+   * under task retries and input repartitioning, so the same rows survive
+   * stage 1 on every run.
+   */
+  private[graft] def twoStageStrataRank(df: DataFrame, groups: Seq[String],
+                                        order: Seq[Column], saltBy: Column,
+                                        k: Column): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val salts = df.sparkSession.sessionState.conf.numShufflePartitions
+    val wLocal = Window.partitionBy(groups.map(col) :+ col("__salt"): _*).orderBy(order: _*)
+    val wGroup = Window.partitionBy(groups.map(col): _*).orderBy(order: _*)
+    df.withColumn("__salt", pmod(hash(saltBy), lit(salts)))
+      .withColumn("__r0", row_number().over(wLocal)).where(col("__r0") <= k)
+      .withColumn("rank", row_number().over(wGroup).cast("long"))
+      .where(col("rank") <= k)
+      .drop("__salt", "__r0")
+  }
+
+  /**
+   * Global rank/cumulative-count over the distinct (v, c) pairs: the
+   * [[orderedScan]] with no groups and weight `c`. At 10M+ distinct values a
+   * `Window.orderBy` plan would funnel every distinct value through ONE task;
+   * this plan's widest single task holds one range partition.
    *
    * `counts` must have columns (v, c); `order` is the total sort order over
    * `v`-rows (e.g. `col("v")` ascending, or `(c desc, v)` for categorical
@@ -54,63 +166,15 @@ object Aggs {
    * rank, cum_before = total c over strictly-earlier rows, d = distinct
    * count, total = sum of c.
    */
-  private[graft] def rankedCounts(counts: DataFrame, order: Seq[Column],
-                                  numParts: Int = 0): DataFrame = {
-    val spark = counts.sparkSession
-    // scale-adaptive partition count (guide §2.2): default to the session's
-    // shuffle parallelism instead of a constant
-    val np = if (numParts > 0) numParts
-      else math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    // persist the aggregated distinct set BEFORE the range partition:
-    // repartitionByRange runs a hidden SAMPLING job over its input, which
-    // otherwise re-executes the full input aggregation a second time — with
-    // the cache the sampling pass fills it and the range exchange (and the
-    // final pass below) read back the distinct set, one full input scan
-    // total. The distinct set is <= the input by construction, so this is
-    // also the cheaper cache at any scale.
+  private[graft] def rankedCounts(counts: DataFrame, order: Seq[Column]): DataFrame = {
+    // persist the aggregated distinct set BEFORE the range partition, so the
+    // range sampling job fills this cache and the input aggregation runs once.
+    // The distinct set is <= the input by construction, so this is also the
+    // cheaper cache at any scale.
     val aggd = counts.transform(org.apache.spark.sql.graft.PersistOnce(_))
-    val parts = aggd.repartitionByRange(np, order: _*)
-      .withColumn("__pid", spark_partition_id())
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
-    val perPart = parts.groupBy("__pid")
-      .agg(count(lit(1)).as("nd"), sum(col("c")).as("nc"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    var dOff = 0L; var cOff = 0L
-    val offs = perPart.map { case (pid, nd, nc) =>
-      val o = pid -> (dOff, cOff); dOff += nd; cOff += nc; o
-    }.toMap
-    val offB = spark.sparkContext.broadcast(offs)
-    // per-partition rank + running count in ONE partition-local ordered pass:
-    // a Window.partitionBy(__pid) here would re-Exchange the whole table to
-    // hashpartitioning(__pid) on top of the range shuffle (plan-probed — the
-    // CLAUDE.md trap), and the per-partition offsets would need one more
-    // broadcast join. sortWithinPartitions + mapPartitions keeps the range
-    // partitioning, adds ZERO shuffle, and folds the offsets in directly.
-    val vIdx = parts.schema.fieldIndex("v")
-    val cIdx = parts.schema.fieldIndex("c")
-    val pIdx = parts.schema.fieldIndex("__pid")
-    val outSchema = org.apache.spark.sql.types.StructType(Seq(
-      parts.schema(vIdx), parts.schema(cIdx),
-      org.apache.spark.sql.types.StructField("r",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cum_before",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-    val dTot = dOff; val cTot = cOff
-    parts.sortWithinPartitions(order: _*)
-      .mapPartitions { it =>
-        var r = 0L; var cum = 0L; var init = false
-        it.map { row =>
-          if (!init) {
-            val (doff, coff) = offB.value.getOrElse(row.getInt(pIdx), (0L, 0L))
-            r = doff; cum = coff; init = true
-          }
-          val c = row.getLong(cIdx)
-          val out = org.apache.spark.sql.Row(row.get(vIdx), c, r, cum)
-          r += 1; cum += c
-          out
-        }
-      }(org.apache.spark.sql.Encoders.row(outSchema))
-      .withColumn("d", lit(dTot)).withColumn("total", lit(cTot))
+    orderedScan(aggd, Nil, order, col("c"))
+      .select(col("v"), col("c"), col("rank").as("r"), col("cum_before"),
+        col("group_rows").as("d"), col("group_weight").as("total"))
   }
 
   /**

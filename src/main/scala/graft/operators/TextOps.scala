@@ -770,47 +770,16 @@ object TextOps {
    * Sequence-packing plan (GPT-style): documents are logically concatenated
    * in ascending `idCol` order and cut into fixed `chunkTokens` windows; each
    * document is assigned its global token offset and the [first, last] chunk
-   * it lands in. The global running sum is a DISTRIBUTED prefix sum — range
-   * partition by id, per-partition totals (one tiny aggregate, collected:
-   * O(partitions) longs), broadcast cumulative offsets, then a
-   * partition-LOCAL ordered window — never a global single-task window, so
-   * the plan is the same shape at 10^12 documents. Pure integer arithmetic:
-   * the oracle replays it as one SUM() OVER (ORDER BY id).
+   * it lands in. The global running sum is a DISTRIBUTED prefix sum — the
+   * ungrouped [[Aggs.orderedScan]] weighted by token count — never a global
+   * single-task window, so the plan is the same shape at 10^12 documents.
+   * Pure integer arithmetic: the oracle replays it as one
+   * SUM() OVER (ORDER BY id).
    */
   def packPlan(df: DataFrame, idCol: String, tokenCol: String,
-               chunkTokens: Int): DataFrame = {
-    val spark = df.sparkSession
-    val parts = math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val ranged = df.select(col(idCol), col(tokenCol).cast("long").as("__n"))
-      .repartitionByRange(parts, col(idCol))
-      .withColumn("__pid", spark_partition_id())
-      .transform(org.apache.spark.sql.graft.PersistOnce(_))
-    // partition totals -> exclusive offsets (partition ids are ordered by the
-    // range partitioner, so offsets accumulate in id order)
-    val totals = ranged.groupBy("__pid").agg(sum(col("__n")).as("__t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-    val offsets = totals.scanLeft((0, 0L)) { case ((_, acc), (pid, t)) => (pid, acc + t) }
-      .init.map(_._2).zip(totals.map(_._1)).map { case (off, pid) => pid -> off }.toMap
-    val offB = spark.sparkContext.broadcast(offsets)
-    // partition-LOCAL cumsum in one mapPartitions pass over the range-sorted
-    // rows: a Window.partitionBy(__pid) here would re-Exchange the whole
-    // table to hashpartitioning(__pid) on top of the range shuffle
-    // (plan-probed) — sortWithinPartitions + an imperative running sum keeps
-    // the range partitioning and adds ZERO shuffle
-    val sorted = ranged.sortWithinPartitions(col(idCol))
-    val outSchema = org.apache.spark.sql.types.StructType(sorted.schema.fields :+
-      org.apache.spark.sql.types.StructField("cum_before",
-        org.apache.spark.sql.types.LongType, nullable = false))
-    val cum = sorted.mapPartitions { it =>
-      var acc = Option.empty[Long]
-      it.map { r =>
-        val n = r.getAs[Long]("__n")
-        val before = acc.getOrElse(offB.value.getOrElse(r.getAs[Int]("__pid"), 0L))
-        acc = Some(before + n)
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ before)
-      }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
-    cum
+               chunkTokens: Int): DataFrame =
+    Aggs.orderedScan(df.select(col(idCol), col(tokenCol).cast("long").as("__n")),
+        Nil, Seq(col(idCol)), col("__n"))
       // integral `div`, not floor(x / c): double division loses exactness
       // past 2^53 total tokens (~10^15 — a real corpus size)
       .withColumn("chunk_first", call_function("div", col("cum_before"), lit(chunkTokens.toLong)))
@@ -820,7 +789,6 @@ object TextOps {
           .otherwise(col("chunk_first")))
       .select(col(idCol), col("__n").as("n_tokens"), col("cum_before"),
         col("chunk_first"), col("chunk_last"))
-  }
 
   /**
    * Train-test contamination screen ("decontamination"): per corpus document,
@@ -874,36 +842,21 @@ object TextOps {
    * Deterministic per-stratum k-sample: within each stratum keep the k rows
    * with the smallest (signed splitmix64(id), id) — a fixed pseudo-random
    * order, so the sample is reproducible, stable under repartitioning, and
-   * extensible (k'=2k keeps the k-sample as a prefix). Two-stage rank with
-   * the salted pre-cap (same discipline as Renderers.renderCapped): stage 1
-   * ranks (stratum, salt) groups so a dominant stratum — at corpus scale one
-   * language can be half the table — never funnels through one reducer;
-   * only the <= salts*k survivors meet in the exact per-stratum rank.
+   * extensible (k'=2k keeps the k-sample as a prefix). The rank is the salted
+   * two-stage [[Aggs.twoStageStrataRank]], so a dominant stratum — at corpus
+   * scale one language can be half the table — never funnels through one
+   * reducer.
    */
   def stratifiedSample(df: DataFrame, strataCol: String, idCol: String,
                        k: Int): DataFrame =
-    twoStageStrataRank(df, strataCol, idCol, lit(k))
+    hashOrderedSample(df, strataCol, idCol, lit(k))
 
-  /** The shared salted two-stage per-stratum rank: stage 1 caps (stratum,
-    * salt) groups (a dominant stratum never funnels through one reducer),
-    * stage 2 ranks the <= salts*k survivors exactly. kCol may be per-row
-    * (per-stratum quotas joined on). */
-  private def twoStageStrataRank(df: DataFrame, strataCol: String,
-                                 idCol: String, kCol: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val salts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val hashed = df.withColumn("__hs", sm64Udf(col(idCol)))
-      .withColumn("__salt", pmod(hash(col(idCol)), lit(salts)))
-    val wLocal = Window.partitionBy(col(strataCol), col("__salt"))
-      .orderBy(col("__hs"), col(idCol))
-    val wGlobal = Window.partitionBy(col(strataCol))
-      .orderBy(col("__hs"), col(idCol))
-    hashed
-      .withColumn("__r0", row_number().over(wLocal)).where(col("__r0") <= kCol)
-      .withColumn("rank", row_number().over(wGlobal).cast("long"))
-      .where(col("rank") <= kCol)
-      .drop("__hs", "__salt", "__r0")
-  }
+  /** Per-stratum rank by (splitmix64(id), id), salted by id, capped at the
+    * per-row `k` (per-stratum quotas may be joined on). */
+  private def hashOrderedSample(df: DataFrame, strataCol: String,
+                                idCol: String, k: Column): DataFrame =
+    Aggs.twoStageStrataRank(df.withColumn("__hs", sm64Udf(col(idCol))), Seq(strataCol),
+      Seq(col("__hs"), col(idCol)), col(idCol), k).drop("__hs")
 
   /** Per-stratum quota sample: each stratum keeps its own ks(stratum)
     * smallest-hash rows; strata absent from ks are dropped. Quotas are
@@ -911,7 +864,7 @@ object TextOps {
   def sampleByStrataCounts(df: DataFrame, strataCol: String, idCol: String,
                            ks: Map[String, Long]): DataFrame = {
     val ksDf = df.sparkSession.createDataFrame(ks.toSeq).toDF(strataCol, "__k")
-    twoStageStrataRank(df.join(broadcast(ksDf), strataCol), strataCol, idCol,
+    hashOrderedSample(df.join(broadcast(ksDf), strataCol), strataCol, idCol,
       col("__k")).drop("__k")
   }
 

@@ -2,7 +2,6 @@ package graft.render
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.operators.Changes
 import graft.query.{Query, QueryPlanner}
 import graft.shell.Shell
@@ -199,30 +198,17 @@ object Renderers {
   }
 
   /** Shared tail: explode tile cover, cap per tile by feature id, MVT-encode.
-    * The cap happens BEFORE encoding and in TWO stages, so no single task
-    * ever sorts an uncapped tile (the reference cap is a streaming counter,
-    * renderer/query.go:112-114; a plain per-tile Window funnels the whole
-    * world through one task at low zoom): stage 1 ranks (tile, salt) groups —
-    * the hot tile spreads over `salts` reducers — and keeps the cap smallest
-    * fids of each group, a provable superset of the tile's global top-cap;
-    * stage 2 ranks the <= cap x salts survivors per tile. The salt is a
-    * deterministic fid hash (stable under task retries, unlike
-    * spark_partition_id). */
+    * The cap happens BEFORE encoding, as the salted two-stage
+    * [[graft.operators.Aggs.twoStageStrataRank]] grouped by tile and salted
+    * by fid, so no single task ever sorts an uncapped tile (the reference cap
+    * is a streaming counter, renderer/query.go:112-114; a plain per-tile
+    * Window funnels the whole world through one task at low zoom). */
   private def renderCapped(features: DataFrame, zoom: Int, layer: String): DataFrame = {
-    val spark = features.sparkSession
-    graft.functions.CellExprs.install(spark)
-    val salts = spark.sessionState.conf.numShufflePartitions
+    graft.functions.CellExprs.install(features.sparkSession)
     val covered = features
       .withColumn("__tile", explode(graft.functions.CellExprs.tile_cover(col("geom"), lit(zoom))))
-      .withColumn("__salt", pmod(hash(col("__fid")), lit(salts)))
-    val wLocal = Window.partitionBy("__tile", "__salt").orderBy(col("__fid"))
-    val pre = covered
-      .withColumn("__lrank", row_number().over(wLocal))
-      .where(col("__lrank") <= MaxFeaturesPerTile)
-    val wTile = Window.partitionBy("__tile").orderBy(col("__fid"))
-    val capped = pre
-      .withColumn("__rank", row_number().over(wTile))
-      .where(col("__rank") <= MaxFeaturesPerTile)
+    val capped = graft.operators.Aggs.twoStageStrataRank(covered, Seq("__tile"),
+      Seq(col("__fid")), col("__fid"), lit(MaxFeaturesPerTile))
     Mvt.renderTiles(
       capped.select(col("__tile"), col("__fid").as("fid"), lit(layer).as("layer"),
         col("geom"), col("__rtags").as("tags")),
