@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import graft.model.Fixtures
 import graft.operators.SpatialJoins
 
@@ -15,10 +14,8 @@ object PlanAudit {
     val d = "/root/testdata/sf0.01"
     println("=== FLAGSHIP pointInPolygonJoin (imagesMeta x benchPolygons) ===")
     val polys = Fixtures.benchPolygons(spark, 200).cache(); polys.count()
-    val levels = polys.select(explode(col("covering")).as("c"))
-      .select(graft.functions.CellExprs.cell_level(col("c"))).distinct().collect().map(_.getInt(0)).toSeq
-    SpatialJoins.pointInPolygonJoin(Fixtures.imagesMeta(spark, 1000000, 32), polys,
-      knownLevels = Some(levels)).select("image_id","poly_id").explain("formatted")
+    SpatialJoins.pointInPolygonJoin(Fixtures.imagesMeta(spark, 1000000, 32), polys)
+      .select("image_id","poly_id").explain("formatted")
     println("=== sj_pip fixture join ===")
     SparkEntry.queries("sj_pip")(spark, d).explain("formatted")
     println("=== ag_percentiles ===")

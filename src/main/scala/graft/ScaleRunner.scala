@@ -25,19 +25,16 @@ object ScaleRunner {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    // polygon side + its covering levels are index/build-time artifacts —
-    // computed once, not per measured query. 200 seeded polygons: a realistic
-    // feature-table side (the 6-polygon fixture is for oracle tests).
+    // polygon side is an index/build-time artifact — computed once, not per
+    // measured query. 200 seeded polygons: a realistic feature-table side
+    // (the 6-polygon fixture is for oracle tests).
     val polygons = Fixtures.benchPolygons(spark,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_POLYS", "200").toInt).cache()
-    val levels = polygons.select(explode(col("covering")).as("c"))
-      .select(graft.functions.CellExprs.cell_level(col("c"))).distinct()
-      .collect().map(_.getInt(0)).toSeq
 
     val mode = if (args.length > 2) args(2) else "all"
     def flagship(n: Long): Long = {
       val images = Fixtures.imagesMeta(spark, n, cores * 4)
-      lazy val pip = SpatialJoins.pointInPolygonJoin(images, polygons, knownLevels = Some(levels))
+      lazy val pip = SpatialJoins.pointInPolygonJoin(images, polygons)
       lazy val tiles = SpatialJoins.tileAssignment(
         Fixtures.imagesMeta(spark, n, cores * 4), 14)
         .groupBy("tile_xx", "tile_yy").agg(count(lit(1)))
@@ -54,8 +51,7 @@ object ScaleRunner {
           // the polygon join, aggregating (tile, polygon) incidence — the
           // "spatial-join + tile-assignment" pipeline as a single job
           val withTiles = SpatialJoins.tileAssignment(images, 14)
-          val joined = SpatialJoins.pointInPolygonJoin(withTiles, polygons,
-            knownLevels = Some(levels))
+          val joined = SpatialJoins.pointInPolygonJoin(withTiles, polygons)
           joined.groupBy(col("tile_xx"), col("tile_yy"), col("poly_id"))
             .agg(count(lit(1)).as("n"))
             .agg(sum("n"), count(lit(1))).collect()(0).getLong(0)

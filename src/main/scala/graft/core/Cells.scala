@@ -72,9 +72,14 @@ object Cells {
   def x(cell: Long): Long = unspread(cell >>> 5)
   def y(cell: Long): Long = unspread(cell >>> 6)
 
-  /** Ancestor of `cell` at `lvl` (lvl <= level(cell)); identity at own level. */
+  /** Ancestor of `cell` at `lvl`; identity at own level. A `lvl` finer than
+    * the cell has no single ancestor (the shift would go negative and name an
+    * unrelated cell), so it throws — key mixed-level cells through
+    * [[normalizeToLevel]] instead. */
   def parentAt(cell: Long, lvl: Int): Long = {
     val l = level(cell)
+    if (lvl > l || lvl < 0)
+      throw new IllegalArgumentException(s"parentAt: level $lvl outside 0..$l of cell $cell")
     (((cell >>> 5) >>> (2 * (l - lvl))) << 5) | lvl.toLong
   }
 

@@ -203,6 +203,56 @@ object GeoOps {
     prep.intersects(factory.toGeometry(e))
   }
 
+  /** Finest level and per-geometry cell budget of [[splitCovering]]. Level 16
+    * is the finest level any engine covering uses, so a level-16 point cell
+    * still has an ancestor at every split level. */
+  val SplitMaxLevel = 16
+  val SplitMaxCells = 64
+
+  /**
+   * Interior/boundary split of a covering (the cell-interior shortcut of
+   * Raster Intervals, SIGMOD 2023, and Raptor, VLDB 2019). A cell is interior
+   * when the polygon `containsProperly` its rectangle grown by 1e-9 degrees
+   * on every side — far more than the rounding of [[Cells.cellOf]] — so every
+   * point keyed to it is covered without a geometry test. Other cells split
+   * into the children that pass [[cellIntersects]], coarsest cell first,
+   * while the level is below [[SplitMaxLevel]] and the geometry keeps at most
+   * [[SplitMaxCells]] cells; what is still unresolved is boundary. The result
+   * subdivides the (disjoint) input covering, sorted by cell. Non-areal or
+   * empty geometries come back all-boundary.
+   */
+  def splitCovering(g: Geometry, covering: Array[Long]): Array[(Long, Boolean)] = {
+    val areal = !g.isEmpty && (g.isInstanceOf[Polygon] || g.isInstanceOf[MultiPolygon])
+    if (!areal) return covering.sorted.map(_ -> false)
+    val prep = prepare(g)
+    def interior(cell: Long): Boolean = {
+      val m = 1e-9
+      prep.containsProperly(factory.toGeometry(new Envelope(
+        Cells.lngLo(cell) - m, Cells.lngHi(cell) + m, Cells.latLo(cell) - m, Cells.latHi(cell) + m)))
+    }
+    val out = Array.newBuilder[(Long, Boolean)]
+    // unresolved cells, coarsest first (ties by id, for a deterministic split)
+    val open = scala.collection.mutable.PriorityQueue.empty[Long](
+      Ordering.by((c: Long) => (-Cells.level(c), -c)))
+    covering.foreach(c => if (interior(c)) out += c -> true else open += c)
+    var cells = covering.length
+    var done = false
+    while (!done && open.nonEmpty) {
+      val cell = open.head
+      val kids =
+        if (Cells.level(cell) < SplitMaxLevel) Cells.children(cell).filter(cellIntersects(prep, _))
+        else Array.empty[Long]
+      done = kids.isEmpty || cells - 1 + kids.length > SplitMaxCells
+      if (!done) {
+        open.dequeue()
+        cells += kids.length - 1
+        kids.foreach(k => if (interior(k)) out += k -> true else open += k)
+      }
+    }
+    open.foreach(c => out += c -> false)
+    out.result().sortBy(_._1)
+  }
+
   def commonAncestor(a: Long, b: Long): Long = {
     var l = math.min(Cells.level(a), Cells.level(b))
     while (l > 0 && Cells.parentAt(a, l) != Cells.parentAt(b, l)) l -= 1

@@ -3,7 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
@@ -93,6 +94,21 @@ object CellExprs {
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
   }
 
+  /** Cells.normalizeToLevel: the cell's ancestor at a finer-or-equal level,
+    * or all its descendants at a finer one — single-level join keys for
+    * mixed-level coverings. */
+  case class CellNormalizeToLevel(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def prettyName: String = "cell_normalize_to_level"
+    override protected def nullSafeEval(c: Any, l: Any): Any =
+      new GenericArrayData(graft.core.Cells.normalizeToLevel(c.asInstanceOf[Long], l.asInstanceOf[Int]))
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (a, b) =>
+        s"new org.apache.spark.sql.catalyst.util.GenericArrayData(graft.core.Cells.normalizeToLevel($a, $b))")
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+  }
+
   case class CellCoveringWkb(first: Expression, second: Expression, third: Expression)
       extends TernaryExpression {
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -105,6 +121,30 @@ object CellExprs {
         s"new org.apache.spark.sql.catalyst.util.GenericArrayData(graft.core.GeoOps.coveringWkb($a, $b, $c))")
     override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
       copy(f, s, t)
+  }
+
+  /** Interior/boundary split of a covering (GeoOps.splitCovering) as
+    * array<struct<cell, interior>>: the polygon side of the point-in-polygon
+    * join, where interior cells need no exact refine. */
+  case class CellSplitCovering(left: Expression, right: Expression)
+      extends BinaryExpression {
+    override def dataType: DataType = ArrayType(SplitCellType, containsNull = false)
+    override def prettyName: String = "cell_split_covering"
+    override protected def nullSafeEval(wkb: Any, covering: Any): Any =
+      splitCoveringData(wkb.asInstanceOf[Array[Byte]], covering.asInstanceOf[ArrayData])
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      defineCodeGen(ctx, ev, (a, b) => s"graft.functions.CellExprs.splitCoveringData($a, $b)")
+    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+  }
+
+  val SplitCellType: StructType = StructType(Seq(
+    StructField("cell", LongType, nullable = false),
+    StructField("interior", BooleanType, nullable = false)))
+
+  def splitCoveringData(wkb: Array[Byte], covering: ArrayData): ArrayData = {
+    val cells = (0 until covering.numElements()).filterNot(covering.isNullAt).map(covering.getLong)
+    val split = graft.core.GeoOps.splitCovering(graft.core.GeoOps.fromWkb(wkb), cells.toArray)
+    new GenericArrayData(split.map { case (c, in) => InternalRow(c, in) })
   }
 
   case class WkbCoversPoint(first: Expression, second: Expression, third: Expression)
@@ -233,7 +273,9 @@ object CellExprs {
     "cell_center_lng" -> (es => CellCenterLng(asL(es(0)))),
     "cell_ancestors" -> (es => CellAncestors(asL(es(0)))),
     "cell_neighbor_disk" -> (es => CellNeighborDisk(asL(es(0)), asI(es(1)))),
+    "cell_normalize_to_level" -> (es => CellNormalizeToLevel(asL(es(0)), asI(es(1)))),
     "cell_covering" -> (es => CellCoveringWkb(es(0), asI(es(1)), asI(es(2)))),
+    "cell_split_covering" -> (es => CellSplitCovering(es(0), Cast(es(1), ArrayType(LongType)))),
     "wkb_covers_point" -> (es => WkbCoversPoint(es(0), asD(es(1)), asD(es(2)))),
     "wkb_intersects" -> (es => WkbIntersects(es(0), es(1))),
     "haversine_m" -> (es => HaversineM(es.map(asD))),
@@ -262,6 +304,12 @@ object CellExprs {
   def cell_neighbor_disk(cell: Column, r: Column): Column = call_function("cell_neighbor_disk", cell, r)
   def cell_covering(wkb: Column, maxLevel: Column, maxCells: Column): Column =
     call_function("cell_covering", wkb, maxLevel, maxCells)
+  /** Single-level keys of a cell: see [[CellNormalizeToLevel]]. */
+  def cell_normalize_to_level(cell: Column, level: Column): Column =
+    call_function("cell_normalize_to_level", cell, level)
+  /** Interior/boundary split of a covering: see [[CellSplitCovering]]. */
+  def cell_split_covering(wkb: Column, covering: Column): Column =
+    call_function("cell_split_covering", wkb, covering)
   def wkb_covers_point(wkb: Column, lat: Column, lng: Column): Column =
     call_function("wkb_covers_point", wkb, lat, lng)
   def wkb_intersects(a: Column, b: Column): Column = call_function("wkb_intersects", a, b)

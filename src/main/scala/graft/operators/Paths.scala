@@ -80,10 +80,10 @@ object Paths {
     import graft.functions.CellExprs._
     val a = areas.select(col("poly_id"), col("geom"))
       .withColumn("__c", explode(cell_covering(col("geom"), lit(level), lit(32))))
-      .withColumn("__c", cell_parent_at(col("__c"), lit(level)))
+      .withColumn("__c", explode(cell_normalize_to_level(col("__c"), lit(level))))
     val p = paths.select(col("geom").as("path_geom"))
       .withColumn("__c", explode(cell_covering(col("path_geom"), lit(level), lit(64))))
-      .withColumn("__c", cell_parent_at(col("__c"), lit(level)))
+      .withColumn("__c", explode(cell_normalize_to_level(col("__c"), lit(level))))
     val cand = a.join(p, "__c").dropDuplicates("poly_id", "path_geom")
       .select(col("poly_id"), col("geom"), col("path_geom"))
       .as[(Long, Array[Byte], Array[Byte])]

@@ -39,7 +39,7 @@ object Sightline {
         CellExprs.cell_of(col("lat"), col("lng"), lit(level)), lit(ring))))
     val b = occluders.select(col("geom"))
       .withColumn("__c", explode(CellExprs.cell_covering(col("geom"), lit(level), lit(32))))
-      .withColumn("__c", CellExprs.cell_parent_at(col("__c"), lit(level)))
+      .withColumn("__c", explode(CellExprs.cell_normalize_to_level(col("__c"), lit(level))))
     // candidates: (origin, occluder wkb) pairs whose cells collide
     val cand = o.join(b, "__c")
       .select(col("origin_id"), col("lat"), col("lng"), col("geom"))

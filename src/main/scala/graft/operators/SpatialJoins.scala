@@ -12,25 +12,35 @@ import graft.functions.CellExprs._
  * (src/diagonal.works/b6/search/spatial.go:65-113): polygon features are keyed
  * by their covering cells; a point's candidate polygons are those whose
  * covering contains one of the point's ancestors. We realise it as a pure
- * equi-join: explode the (small) polygon covering, compute the distinct
- * covering levels (a <=30-element set, one tiny job), emit per point one join
- * key per such level, then refine exactly with JTS. Catalyst/AQE then picks
- * broadcast vs sort-merge and splits skewed cells.
+ * equi-join: split the (small) polygon covering into interior and boundary
+ * cells and explode it, compute the distinct cell levels (a <=30-element set,
+ * one tiny job), emit per point one join key per such level, then refine
+ * exactly with JTS — but only the candidates of boundary cells: a point keyed
+ * to an interior cell is a hit without a geometry test. Catalyst/AQE then
+ * picks broadcast vs sort-merge and splits skewed cells.
  */
 object SpatialJoins {
 
   /**
    * Point-in-polygon join.
-   * points: must have (lat, lng, cell16) columns; polygons: (geom wkb, covering).
+   * points: must have (lat, lng, cell16) columns, `pointCell` at a level no
+   * coarser than 16; polygons: (geom wkb, covering).
    * Returns points columns + polygon columns for each containment
    * (boundary-inclusive `covers`, matching the reference's ContainsPoint refine,
    * src/diagonal.works/b6/api/functions/features.go:49-105).
+   *
+   * The polygon side goes through `cell_split_covering`
+   * (GeoOps.splitCovering): interior cells lie strictly inside the polygon,
+   * boundary cells are refined down to level 16 within a 64-cell budget. The
+   * refine is `__in || wkb_covers_point(...)`, and Catalyst's `Or`
+   * short-circuits in generated code, so only boundary candidates pay the WKB
+   * hash, locator lookup and JTS test. The split subdivides a disjoint
+   * covering, so each (point, polygon) pair is still produced at most once.
    */
   def pointInPolygonJoin(points: DataFrame, polygons: DataFrame,
                          pointCell: String = "cell16",
                          geomCol: String = "geom",
                          coveringCol: String = "covering",
-                         knownLevels: Option[Seq[Int]] = None,
                          normalizeLevel: Option[Int] = None,
                          polyIdCol: String = "poly_id"): DataFrame = {
     graft.functions.CellExprs.install(points.sparkSession)
@@ -41,28 +51,28 @@ object SpatialJoins {
         // sets only grow, exactness comes from the JTS refine), so the BIG
         // probe side computes exactly one join key per row: no Generate node,
         // no row inflation. Right for broadcast-sized polygon sides.
-        val norm = udf((c: Long) => graft.core.Cells.normalizeToLevel(c, nl))
         val polyCells = polygons
           .withColumn("__jcell", explode(col(coveringCol)))
-          .withColumn("__jcell", explode(norm(col("__jcell"))))
+          .withColumn("__jcell", explode(cell_normalize_to_level(col("__jcell"), lit(nl))))
           .dropDuplicates(polyIdCol, "__jcell")
         val keyed = points.withColumn("__jcell", cell_parent_at(col(pointCell), lit(nl)))
         keyed.join(polyCells, "__jcell")
           .where(wkb_covers_point(col(geomCol), col("lat"), col("lng")))
           .drop("__jcell")
       case None =>
-        val polyCells = polygons.withColumn("__jcell", explode(col(coveringCol)))
-        // Distinct covering levels: bounded by MaxLevel+1=30 values; computed on
-        // the (small) polygon side so the big point side needs exactly one pass.
-        // Pass knownLevels when the polygon index already records them (index
-        // metadata) to skip this tiny driver job entirely.
-        val levels: Array[Int] = knownLevels.map(_.toArray).getOrElse(polyCells
-          .select(cell_level(col("__jcell")).as("l")).distinct().collect().map(_.getInt(0))).sorted
+        val polyCells = polygons
+          .withColumn("__jcell", explode(cell_split_covering(col(geomCol), col(coveringCol))))
+          .withColumn("__in", col("__jcell.interior"))
+          .withColumn("__jcell", col("__jcell.cell"))
+        // Distinct split-cell levels: bounded by MaxLevel+1=30 values; computed
+        // on the (small) polygon side so the big point side needs one pass.
+        val levels = polyCells
+          .select(cell_level(col("__jcell")).as("l")).distinct().collect().map(_.getInt(0)).sorted.toSeq
         val keyed = points.withColumn("__jcell",
           explode(array(levels.map(l => cell_parent_at(col(pointCell), lit(l))): _*)))
         keyed.join(polyCells, "__jcell")
-          .where(wkb_covers_point(col(geomCol), col("lat"), col("lng")))
-          .drop("__jcell")
+          .where(col("__in") || wkb_covers_point(col(geomCol), col("lat"), col("lng")))
+          .drop("__jcell", "__in")
     }
   }
 
@@ -75,10 +85,13 @@ object SpatialJoins {
   def intersectionJoin(left: DataFrame, right: DataFrame,
                        leftGeom: String = "geom", rightGeom: String = "geom",
                        level: Int = 12): DataFrame = {
+    // both coverings normalised to exactly `level`: a large geometry's
+    // coarser cells expand to their descendants, so they still meet a small
+    // geometry's level-`level` cells
     val l = left.withColumn("__lc", explode(cell_covering(col(leftGeom), lit(level), lit(64))))
-      .withColumn("__lc", cell_parent_at(col("__lc"), lit(level) /* normalise */))
+      .withColumn("__lc", explode(cell_normalize_to_level(col("__lc"), lit(level))))
     val r = right.withColumn("__rc", explode(cell_covering(col(rightGeom), lit(level), lit(64))))
-      .withColumn("__rc", cell_parent_at(col("__rc"), lit(level)))
+      .withColumn("__rc", explode(cell_normalize_to_level(col("__rc"), lit(level))))
     l.join(r, col("__lc") === col("__rc"))
       .where(wkb_intersects(col(leftGeom), col(rightGeom)))
       .drop("__lc", "__rc")

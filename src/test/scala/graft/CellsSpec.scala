@@ -64,6 +64,22 @@ class CellsSpec extends AnyFunSuite {
     kids.foreach(k => assert(Cells.parent(k) == c))
   }
 
+  test("parentAt rejects a level finer than the cell instead of naming an unrelated cell") {
+    val c = Cells.cellOf(51.53, -0.12, 10)
+    assert(Cells.parentAt(c, 10) == c)
+    intercept[IllegalArgumentException](Cells.parentAt(c, 12))
+    intercept[IllegalArgumentException](Cells.parentAt(c, -1))
+  }
+
+  test("normalizeToLevel expands a coarser cell to its descendants and collapses a finer one") {
+    val c = Cells.cellOf(51.53, -0.12, 10)
+    val down = Cells.normalizeToLevel(c, 12)
+    assert(down.length == 16 && down.distinct.length == 16)
+    down.foreach(d => assert(Cells.level(d) == 12 && Cells.contains(c, d)))
+    val fine = Cells.cellOf(51.53, -0.12, 14)
+    assert(Cells.normalizeToLevel(fine, 12).toSeq == Seq(Cells.parentAt(fine, 12)))
+  }
+
   test("neighbor ring has 8r cells in the grid interior") {
     val c = Cells.cellOf(51.53, -0.12, 12)
     assert(Cells.neighborRing(c, 1).length == 8)
